@@ -1,6 +1,6 @@
 package graft.mr
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference engine's single datum type: a schema-less string pair
@@ -19,6 +19,18 @@ case class KV(key: String, value: String)
   * (coordinator.go:105), task retry + FileCommitProtocol give at-least-once
   * execution with exactly-once output (worker.go:84-94), and the sort-based
   * shuffle replaces the nMap×nReduce JSON intermediate files (worker.go:86).
+  *
+  * One shuffle, as in the reference: map output is hash-partitioned by key
+  * into nReduce buckets, and each reduce task sorts its bucket, groups,
+  * reduces and (in `runToText`) writes its own part file — the reference's
+  * mr-out-<r>, keys ascending in UTF-8 byte order like worker.go's
+  * `sort.Sort(ByKey)`. Grouping is on the `key` column, not a lambda: a
+  * lambda key (`groupByKey(_.key)`) appends a copy of the key to every
+  * shuffled row and hides the key partitioning from the planner, which then
+  * needs a second exchange to reach nReduce partitions. On the column, the
+  * explicit `repartition(nReduce, key)` already meets `mapGroups`'
+  * clustering requirement, and AQE never coalesces an explicit
+  * repartition, so there are always nReduce reduce tasks.
   *
   * Scale notes: `mapf` sees a whole file as one string — that is the
   * reference's semantic contract (worker.go:54-60), so per-file memory is
@@ -45,20 +57,20 @@ object MRJob {
     val mapped: Dataset[KV] = files.flatMap { case (path, contents) =>
       mapf(fileName(path), contents)
     }
-    // groupByKey shuffles on key hash — the reference's fnv32a%nReduce
-    // partitioning is semantically equivalent (SURVEY.md §1.3): the test
-    // contract is per-key grouping, not bucket assignment.
-    val reduced = mapped
-      .groupByKey(_.key)
+    // Spark's key hash stands in for the reference's fnv32a%nReduce
+    // (SURVEY.md §1.3): the contract is per-key grouping into nReduce
+    // buckets, not which bucket a key lands in.
+    mapped
+      .repartition(nReduce, col("key"))
+      .groupBy(col("key")).as[String, KV]
       .mapGroups { (k, it) => KV(k, reducef(k, it.map(_.value).toSeq)) }
-    // nReduce controls output-partition (and thus sink-file) count parity.
-    reduced.repartition(nReduce, col("key"))
   }
 
   /** Text sink with the reference's exact `"key value\n"` line format
-    * (worker.go:151) — one part file per reduce partition mirrors
-    * mr-out-<r>. Spark's FileCommitProtocol provides the same
-    * temp-file + rename idempotent commit as worker.go:156-164.
+    * (worker.go:151) — each reduce task writes its sorted groups straight
+    * to one part file, mirroring mr-out-<r>. Spark's FileCommitProtocol
+    * provides the same temp-file + rename idempotent commit as
+    * worker.go:156-164.
     */
   def runToText(spark: SparkSession,
                 inputPaths: Seq[String],
@@ -80,13 +92,31 @@ object MRJob {
   * and the differential golden tests.
   */
 object MRApps {
-  /** Maximal runs of Unicode letters — Go's
-    * `FieldsFunc(c, r => !unicode.IsLetter(r))` (mrapps/wc.go:23-26);
-    * Java `\p{L}` matches the same category-L set.
+  /** Separator runs for the SQL `split` form of the tokenizer (the
+    * DataFrame queries); Java `\p{L}` matches the same category-L set as
+    * `Character.isLetter`.
     */
   val TokenPattern = "[^\\p{L}]+"
-  def tokenize(contents: String): Array[String] =
-    contents.split(TokenPattern).filter(_.nonEmpty)
+
+  /** Maximal runs of Unicode letters — Go's
+    * `FieldsFunc(c, r => !unicode.IsLetter(r))` (mrapps/wc.go:23-26) — by
+    * one code-point scan. Same tokens as `split(TokenPattern)`; lone
+    * surrogates and combining marks are separators, as in Go.
+    */
+  def tokenize(contents: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    val n = contents.length
+    var start = -1
+    var i = 0
+    while (i < n) {
+      val cp = contents.codePointAt(i)
+      if (Character.isLetter(cp)) { if (start < 0) start = i }
+      else if (start >= 0) { out += contents.substring(start, i); start = -1 }
+      i += Character.charCount(cp)
+    }
+    if (start >= 0) out += contents.substring(start, n)
+    out.result()
+  }
 
   /** wc: emit (word,"1") per occurrence; count = number of values
     * (mrapps/wc.go:21-44). */

@@ -7,9 +7,10 @@ import org.scalacheck.rng.Seed
 /** Property tests for the tokenizer (SURVEY.md §7 risk: Go
   * `unicode.IsLetter` vs Java `\p{L}` parity). Two invariants over
   * ScalaCheck-generated unicode text (fixed seed — deterministic):
-  * tokens are exactly the maximal category-L runs (checked against an
-  * independent Character.isLetter scanner), and the SQL `split` path used
-  * by the DataFrame queries agrees with the JVM regex path used by MRApps.
+  * MRApps' code-point scanner returns exactly the maximal category-L runs
+  * (checked against an independent Character.isLetter scanner and against
+  * the JVM regex `split(TokenPattern)`), and the SQL `split` path used by
+  * the DataFrame queries agrees with both JVM paths.
   */
 class TokenizerPropSpec extends SparkSuite {
 
@@ -37,11 +38,15 @@ class TokenizerPropSpec extends SparkSuite {
     out.result()
   }
 
+  private def regexTokens(s: String): Seq[String] =
+    s.split(MRApps.TokenPattern).filter(_.nonEmpty).toSeq
+
   test("tokenize == maximal Character.isLetter runs over 500 generated texts") {
     val texts = samples(500)
     assert(texts.exists(_.nonEmpty))
     texts.foreach { s =>
       assert(MRApps.tokenize(s).toSeq == scanTokens(s), s"input: ${s.take(80)}")
+      assert(MRApps.tokenize(s).toSeq == regexTokens(s), s"input: ${s.take(80)}")
     }
   }
 
@@ -52,7 +57,7 @@ class TokenizerPropSpec extends SparkSuite {
       .selectExpr(s"split(text, '${MRApps.TokenPattern.replace("\\", "\\\\")}') AS toks")
       .collect()
       .map(_.getSeq[String](0).filter(_.nonEmpty).toList)
-    val viaJvm = texts.map(MRApps.tokenize(_).toList)
-    assert(viaSql.toSeq == viaJvm.toSeq)
+    assert(viaSql.toSeq == texts.map(regexTokens(_).toList))
+    assert(viaSql.toSeq == texts.map(MRApps.tokenize(_).toList))
   }
 }
